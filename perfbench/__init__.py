@@ -1,0 +1,5 @@
+"""Engine benchmark: ingest ticks, ad-hoc SQL beside commits, curation jobs.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
